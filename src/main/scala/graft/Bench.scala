@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Benchmark main: runs every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line. A query that throws is reported with its error and
@@ -7,20 +7,21 @@ import org.apache.spark.sql.SparkSession
   * success (the count() it skips would otherwise read as a speedup).
   */
 object Bench {
+  /** One row's measurements: `best` is the reported min, `b2lo`/`b2hi` its
+    * two best warm runs, `wmin`/`wmax` the full warm range, `compiles` the
+    * codegen classes each run compiled (run 1 first).
+    */
+  private final case class RowResult(name: String, best: Double, b2lo: Double,
+    b2hi: Double, wmin: Double, wmax: Double, error: Option[String],
+    compiles: Vector[Long]) {
+    // the reported min itself failed to replicate (see `noisy` below)
+    def noisy: Boolean = error.isEmpty && b2lo > 0 && b2hi / b2lo > 1.5 && b2hi - b2lo > 0.1
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Session.tune(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.get(cpus)
     // Warm the JVM (Spark core JIT, codegen infra) on data-free work so the
     // first measured query doesn't absorb one-time startup cost.
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -186,8 +187,13 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
+      // generated classes compiled per run: Spark compiles only on a miss
+      // in its JVM-wide codegen cache, so a warm run's count is the code it
+      // could not reuse (see Session.CodegenCacheMaxEntries)
+      val compiles = Vector.newBuilder[Long]
       def once(): (Double, Option[String]) = {
         System.gc() // isolate queries from each other's garbage
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         // toRdd.count(), NOT Dataset.count(): count() plans a NEW query
         // whose column pruning DELETES expensive expressions the count
@@ -201,7 +207,9 @@ object Bench {
                     System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
                     Some(e.getClass.getSimpleName)
                   }
-        ((System.nanoTime() - t0) / 1e9, err)
+        val dt = (System.nanoTime() - t0) / 1e9
+        compiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+        (dt, err)
       }
       var timings = (1 to runs).map(_ => once()).toVector
       // interference detector input: the WARM successful runs (run 1 fills
@@ -240,11 +248,11 @@ object Bench {
       // range — a flagged row shows everything the detector saw.
       val w = { val ws = warm; if (ws.size >= 2) ws else base }
       val best2 = w.sorted.take(2)
-      (name, base.min, best2.min, best2.max, w.min, w.max,
-        timings.flatMap(_._2).headOption)
+      RowResult(name, base.min, best2.min, best2.max, w.min, w.max,
+        timings.flatMap(_._2).headOption, compiles.result())
     }
-    val qs = results.map { case (k, v, _, _, _, _, _) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, _, _, _, _, Some(e)) => s"${jstr(k)}:${jstr(e)}" }
+    val qs = results.map(r => s"${jstr(r.name)}:${r.best}").mkString("{", ",", "}")
+    val failed = results.flatMap(r => r.error.map(e => s"${jstr(r.name)}:${jstr(e)}"))
       .mkString("{", ",", "}")
     // self-identifying spread: queries whose two BEST warm runs (after the
     // adaptive re-measure above) disagree by >1.5× AND by at least 100 ms
@@ -254,13 +262,15 @@ object Bench {
     // floor exists because sub-100 ms queries swing past 1.5× on pure
     // scheduler jitter (f1_filter [0.077, 0.192]) — a spread that small
     // can't mislead a round-over-round comparison anyway.
-    val noisy = results.collect {
-      case (k, _, b2lo, b2hi, mn, mx, None)
-        if b2lo > 0 && b2hi / b2lo > 1.5 && b2hi - b2lo > 0.1 =>
-        s"${jstr(k)}:[$mn,$mx]"
-    }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val nFailed = results.count(_._7.isDefined)
+    val noisy = results.filter(_.noisy).map(r => s"${jstr(r.name)}:[${r.wmin},${r.wmax}]")
+      .mkString("{", ",", "}")
+    val total = results.map(_.best).sum
+    val nFailed = results.count(_.error.isDefined)
+    // per row: codegen classes compiled by run 1, then by each warm run
+    val compilesJson = results.map(r => s"${jstr(r.name)}:${r.compiles.mkString("[", ",", "]")}")
+      .mkString("{", ",", "}")
+    val compilesRun1 = results.map(_.compiles.head).sum
+    val compilesWarm = results.map(_.compiles.tail.sum).sum
     // capture id: md5 of the per-query timing map — names THIS capture in
     // both the artifact and the summary a commit message is built from, so
     // a committed BENCH_DETAIL.json can never silently trail the capture
@@ -295,7 +305,7 @@ object Bench {
     // raw probe seconds still land in the artifact for the record) unless
     // the caller supplied a full set of refs for that hardware/width via
     // the env overrides.
-    val refsCalibrated = cpus.trim.toIntOption.contains(32) ||
+    val refsCalibrated = cpus == 32 ||
       Seq("SPARK_GRAFT_WARMUP_REF", "SPARK_GRAFT_IO_REF",
         "SPARK_GRAFT_IOW_REF", "SPARK_GRAFT_MEMBW_REF")
         .forall(sys.env.contains)
@@ -329,7 +339,7 @@ object Bench {
     val pageCacheSuspect = refsCalibrated && !cotenant &&
       ((ioProbeSec > 0 && ioProbeSec > 1.2 * ioRefSec) ||
        (ioWriteSec > 0 && ioWriteSec > 1.2 * ioWriteRefSec))
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"n_failed":$nFailed,"runs":$runs,"noisy":$noisy,"capture_id":"$captureId","warmup_sec":$warmupSec,"warmup_ref_sec":$warmupRefSec,"io_probe_sec":$ioProbeSec,"io_ref_sec":$ioRefSec,"io_write_sec":$ioWriteSec,"io_write_ref_sec":$ioWriteRefSec,"membw_sec":$membwSec,"membw_ref_sec":$membwRefSec,"sentinel_refs_calibrated":$refsCalibrated,"cotenant":$cotenant,"page_cache_suspect":$pageCacheSuspect,"membw_suspect":$membwSuspect,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"codegen_compiles":$compilesJson,"failed":$failed,"n_failed":$nFailed,"runs":$runs,"noisy":$noisy,"capture_id":"$captureId","warmup_sec":$warmupSec,"warmup_ref_sec":$warmupRefSec,"io_probe_sec":$ioProbeSec,"io_ref_sec":$ioRefSec,"io_write_sec":$ioWriteSec,"io_write_ref_sec":$ioWriteRefSec,"membw_sec":$membwSec,"membw_ref_sec":$membwRefSec,"sentinel_refs_calibrated":$refsCalibrated,"cotenant":$cotenant,"page_cache_suspect":$pageCacheSuspect,"membw_suspect":$membwSuspect,"codegen_compiles_total":{"run1":$compilesRun1,"warm":$compilesWarm},"sf":"$sfDir"}"""
     println(json)
     // Also persist the line to a file: stdout capture truncates on long
     // runs (BENCH_r04 lost 9 of 78 per-query timings to the log tail), so
@@ -357,11 +367,7 @@ object Bench {
     // artifact it described flagged rows (r11 c22e238, r12 a53676d). A
     // message derived from this line cannot drift from the capture.
     if (only.isEmpty) {
-      val noisyKeys = results.collect {
-        case (k, _, b2lo, b2hi, mn, mx, None)
-          if b2lo > 0 && b2hi / b2lo > 1.5 && b2hi - b2lo > 0.1 =>
-          f"$k [$mn%.2f, $mx%.2f]"
-      }
+      val noisyKeys = results.filter(_.noisy).map(r => f"${r.name} [${r.wmin}%.2f, ${r.wmax}%.2f]")
       val summary = f"bench: ${results.size} queries, total $total%.1f s, " +
         s"failed $nFailed, capture $captureId, " +
         f"warmup $warmupSec%.2f s (ref $warmupRefSec%.2f), " +
@@ -370,7 +376,8 @@ object Bench {
         f"membw $membwSec%.2f s (ref $membwRefSec%.2f)" +
         f"${if (cotenant) " CO-TENANT (loaded box)" else ""}" +
         f"${if (pageCacheSuspect) " PAGE-CACHE SUSPECT" else ""}" +
-        f"${if (membwSuspect) " MEMBW SUSPECT (slow box)" else ""}, noisy: " +
+        f"${if (membwSuspect) " MEMBW SUSPECT (slow box)" else ""}" +
+        f"${if (refsCalibrated) "" else " SENTINELS UNCALIBRATED"}, noisy: " +
         (if (noisyKeys.isEmpty) "none" else noisyKeys.mkString("; ")) + "\n"
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("target/bench_summary.txt"), summary.getBytes("UTF-8"))

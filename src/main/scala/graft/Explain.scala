@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-capture main: for each named query, print the optimized logical
   * plan, then EXECUTE the real plan (`toRdd.count()` — Bench's timing
   * action) and print the AQE FINAL physical plan, which is the only plan
@@ -21,18 +19,7 @@ object Explain {
       .getOrElse(sys.error("usage: Explain <q1,q2,...> <dir> [runs]"))
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val runs = args.lift(2).flatMap(_.toIntOption).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Session.tune(spark)
+    val spark = Session.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     names.foreach { name =>
       (1 to runs).foreach { r =>
         val df = SparkEntry.queries(name)(spark, dir)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: print the formatted physical plan and wall time for
   * selected SparkEntry queries. Usage:
   *   runMain graft.PlanAudit <sfDir> <queryName> [queryName...]
@@ -21,17 +19,7 @@ object PlanAudit {
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val runs = math.max(1,
       sys.env.get("SPARK_GRAFT_RUNS").flatMap(_.trim.toIntOption).getOrElse(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Session.tune(spark)
+    val spark = Session.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // normalize per-execution id churn so a diff means a structural change
     def norm(plan: String): String = plan
       .replaceAll("#\\d+", "#N").replaceAll("plan_id=\\d+", "plan_id=N")

@@ -46,16 +46,7 @@ object ScaleGen {
     val dst = args.lift(1).getOrElse("target/scaledata/sf1")
     val copies = args.lift(2).flatMap(_.toIntOption).getOrElse(10)
     val hotHead = args.lift(3).flatMap(_.toIntOption).getOrElse(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Session.tune(spark)
+    val spark = Session.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     if (hotHead > 0) generateDocumentsHot(spark, src, dst, copies, hotHead)
     else generate(spark, src, dst, copies)
     spark.stop()

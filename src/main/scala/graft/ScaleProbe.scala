@@ -540,8 +540,7 @@ object ScaleProbe {
     // map-side partial aggregates/sorts (pre-exchange state lives at scan
     // granularity, not shuffle granularity).
     val maxPartMb = sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_MB", "128")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = Session.builder(cpus.toInt)
       // harness knob, probes only: the driver-gated streaming replays
       // memory-sink their results, and at 1000× a corpus-sized result
       // (e3's ~5M deduped rows) exceeds the 1 GB default — the SINK would
@@ -564,11 +563,6 @@ object ScaleProbe {
       .config("spark.sql.shuffle.partitions", shufParts)
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", s"${advisoryMb}m")
       .config("spark.sql.files.maxPartitionBytes", s"${maxPartMb}m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Session.tune(spark)

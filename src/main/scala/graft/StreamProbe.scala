@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Streaming-row attribution main (r21): runs named SparkEntry queries with
@@ -19,18 +18,7 @@ object StreamProbe {
       .getOrElse(sys.error("usage: StreamProbe <q1,q2,...> [dir] [runs]"))
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val runs = args.lift(2).flatMap(_.toIntOption).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Session.tune(spark)
+    val spark = Session.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // SPARK_GRAFT_PROBE_CONF="k=v;k2=v2" — runtime conf overrides for
     // A/B experiments (state width, provider class) without a rebuild
     sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach { s =>
